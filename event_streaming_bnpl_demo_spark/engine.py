@@ -59,7 +59,9 @@ class BnplEngine:
     # -- command side -----------------------------------------------------
     def _emit(self, event: dict) -> None:
         """Append one event (durability point; producer/producer.go:16-25
-        analog). One file per event keeps micro-batch replay exact."""
+        analog). One file per event makes each write atomic from the
+        reader's view; the next ``process()`` takes every pending file
+        in one micro-batch."""
         event.setdefault(
             "ingest_ts",
             datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3]
@@ -104,12 +106,15 @@ class BnplEngine:
     def process(self) -> None:
         """Advance the pipeline over everything emitted so far (the
         consumer poll loop, consumer/consumer.go:75-96, as one
-        checkpointed availableNow pass)."""
+        checkpointed availableNow pass, i.e. one micro-batch)."""
         self.pipeline.run_stream(available_now=True)
 
     # -- query side -------------------------------------------------------
     def user_status(self, user_id: str) -> tuple[DataFrame, DataFrame]:
         """GET /user/:id/status: (promises, bills) filter-projects with
-        yyyy-MM-dd formatting and NULL-safe paid_date (main.go:213-270)."""
+        yyyy-MM-dd formatting and NULL-safe paid_date (main.go:213-270).
+        The frames are lazy over the materialized projections: collect
+        them before the next ``process()``, which replaces those
+        directories."""
         return transforms.user_status(
             self.pipeline.promises(), self.pipeline.bills(), user_id)

@@ -103,11 +103,15 @@ def read_kafka_stream(spark: SparkSession, bootstrap_servers: str,
 
 
 def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = 1) -> DataFrame:
+                      max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming read of a JSON-lines event directory.
 
-    ``maxFilesPerTrigger`` is the backpressure knob the reference lacked
-    (unbounded ``GetRecords``, consumer/consumer.go:76-78).
+    By default each trigger takes every new file, so one availableNow
+    pass is one micro-batch (what ``BnplPipeline`` relies on).
+    ``max_files_per_trigger`` opts into ``maxFilesPerTrigger``, the
+    backpressure knob the reference lacked (unbounded ``GetRecords``,
+    consumer/consumer.go:76-78), for callers that want small bounded
+    batches.
     """
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:

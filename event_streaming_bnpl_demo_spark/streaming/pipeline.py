@@ -15,9 +15,15 @@ iterator restart loss, consumer/consumer.go:64), with:
 - projections maintained in foreachBatch as idempotent recomputes
   from the accumulated log (plain parquet has no MERGE; recompute-
   from-log is exact, replayable event-sourcing doctrine — SURVEY §7
-  hard part (a)). At 100 TB the same foreachBatch body becomes a
-  keyed MERGE into a Delta/Iceberg table; the transform layer is
-  unchanged.
+  hard part (a)) and materialized once per batch; reads serve the
+  materialized directories. At 100 TB the same foreachBatch body
+  becomes a keyed MERGE into a Delta/Iceberg table; the transform
+  layer is unchanged.
+
+One availableNow pass is one micro-batch: the pipeline reads its input
+without a per-trigger file cap, so a backlog of N command files pays the
+per-batch fixed cost (archive write + projection rewrites) once, not N
+times.
 
 Delivery: file source + checkpoint gives exactly-once source progress;
 the archive id is a content hash and projections dedup on natural keys,
@@ -40,8 +46,9 @@ class BnplPipeline:
     """File-source streaming pipeline with parquet sinks.
 
     Layout under ``out_dir``: ``events_log/`` (append, partitioned by
-    event_type), ``payment_promises/``, ``member_bills/`` (recomputed
-    projections), ``_checkpoint/``.
+    event_type), ``payment_promises/``, ``member_bills/`` (recompute
+    mode) or ``_member_bills_state/`` (incremental mode),
+    ``_checkpoint/``.
     """
 
     def __init__(self, spark: SparkSession, in_dir: str, out_dir: str,
@@ -61,7 +68,8 @@ class BnplPipeline:
         ``projection_mode`` picks the maintenance strategy:
 
         - ``'recompute'`` (default): projections are rebuilt from the
-          full accumulated log each batch — maximally simple and
+          full accumulated log at batch time and materialized; reads
+          serve the materialized directories — maximally simple and
           self-healing, O(log) per batch. Right for moderate logs and
           for backfills.
         - ``'incremental'``: each batch's PARTIAL aggregate folds into
@@ -73,6 +81,12 @@ class BnplPipeline:
           would produce (equivalence is tested). On a lakehouse table
           the same fold is a keyed MERGE INTO; plain parquet here uses
           write-to-tmp + directory swap.
+
+        An ``out_dir`` keeps the mode it was first run with for life:
+        each mode's projections are its own state, so switching would
+        serve or fold over a state the other mode never maintained.
+        Opening an ``out_dir`` that holds the other mode's artifact
+        raises ``ValueError``.
         """
         if projection_mode not in ("recompute", "incremental"):
             raise ValueError(f"unknown projection_mode {projection_mode!r}")
@@ -86,6 +100,13 @@ class BnplPipeline:
         self.promises_dir = os.path.join(out_dir, "payment_promises")
         self.bills_dir = os.path.join(out_dir, "member_bills")
         self.checkpoint = os.path.join(out_dir, "_checkpoint")
+        other = (self.bills_dir if projection_mode == "incremental"
+                 else self.bills_state_dir)
+        if os.path.isdir(other):
+            raise ValueError(
+                f"{out_dir} holds {os.path.basename(other)}/, written in "
+                f"the other projection mode; an out_dir cannot switch to "
+                f"projection_mode={projection_mode!r}")
 
     # -- batch replay (same transforms, spark.read) ----------------------
     def replay_batch(self) -> None:
@@ -96,9 +117,12 @@ class BnplPipeline:
     def run_stream(self, available_now: bool = True) -> None:
         """Process everything currently in in_dir through the streaming
         engine (availableNow trigger: real micro-batches + checkpoint,
-        terminates when caught up — the test/CI mode). Pass
-        ``available_now=False`` for a continuous 1 s-trigger service
-        matching the reference's poll cadence (BASELINE.md)."""
+        terminates when caught up — the test/CI mode). The input is read
+        without a file cap, so one pass takes the whole backlog as one
+        micro-batch. Pass ``available_now=False`` for a continuous
+        1 s-trigger service matching the reference's poll cadence
+        (BASELINE.md); each trigger then takes every file that arrived
+        since the last one."""
         stream = read_event_stream(self.spark, self.in_dir)
         writer = (
             stream.writeStream
@@ -170,10 +194,8 @@ class BnplPipeline:
         # recompute mode reads the log AFTER archiving — ordered
         self._archive(events)
         log = self.read_log()
-        (transforms.project_promises(log)
-         .write.mode("overwrite").parquet(self.promises_dir))
-        (transforms.project_bills(log)
-         .write.mode("overwrite").parquet(self.bills_dir))
+        self._swap_write(transforms.project_promises(log), self.promises_dir)
+        self._swap_write(transforms.project_bills(log), self.bills_dir)
 
     def _fold_promises(self, batch: DataFrame) -> None:
         delta_p = transforms.project_promises(batch)
@@ -258,22 +280,20 @@ class BnplPipeline:
                 "files_after": _files(self.log_dir)}
 
     def promises(self) -> DataFrame:
-        # Keyed on the configured mode — NOT on directory existence —
-        # so re-running the same out_dir with the mode switched never
-        # serves a projection the other mode left behind. In recompute
-        # mode the log is the source of truth and the projection is
-        # (lazily) recomputed from it at read time — exact even when a
-        # caught-up checkpoint meant this run wrote no batch at all;
-        # the per-batch materialized dir remains for external readers.
-        if self.projection_mode == "incremental":
-            return self.spark.read.parquet(self.promises_dir)
-        return transforms.project_promises(self.read_log())
+        """The promise projection, read from the directory both modes
+        materialize at batch time. The returned DataFrame is lazy and
+        valid only until the next batch, which swaps the directory out
+        (it is briefly absent mid-swap): collect it before the next
+        ``run_stream`` and not while a continuous run is going."""
+        return self.spark.read.parquet(self.promises_dir)
 
     def bills(self) -> DataFrame:
+        """The bill projection; valid only until the next batch, as
+        for :meth:`promises`."""
         # incremental mode: the folded state table is the source of
         # truth and the bill view is a cheap projection over it;
-        # recompute mode derives bills from the log (see promises()).
+        # recompute mode materializes the bills themselves per batch.
         if self.projection_mode == "incremental":
             return transforms.bills_from_state(
                 self.spark.read.parquet(self.bills_state_dir))
-        return transforms.project_bills(self.read_log())
+        return self.spark.read.parquet(self.bills_dir)

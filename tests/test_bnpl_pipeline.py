@@ -157,15 +157,17 @@ def test_incremental_equals_recompute(spark, tmp_path):
     every combiner is associative, commutative, and idempotent."""
     events = list(reversed(GOLDEN)) + EXTRA_USER + GOLDEN  # reorder + dupes
     in_dir = str(tmp_path / "in")
-    write_events(in_dir, events[:4], "a.jsonl")
-    write_events(in_dir, events[4:], "b.jsonl")
 
+    # one pass per file: the duplicates in b.jsonl reach the fold in a
+    # second micro-batch, not deduped away inside a single one
     pipes = {}
-    for mode in ("recompute", "incremental"):
-        out = str(tmp_path / f"out_{mode}")
-        pipe = BnplPipeline(spark, in_dir, out, projection_mode=mode)
-        pipe.run_stream(available_now=True)
-        pipes[mode] = pipe
+    for name, chunk in (("a.jsonl", events[:4]), ("b.jsonl", events[4:])):
+        write_events(in_dir, chunk, name)
+        for mode in ("recompute", "incremental"):
+            out = str(tmp_path / f"out_{mode}")
+            pipe = BnplPipeline(spark, in_dir, out, projection_mode=mode)
+            pipe.run_stream(available_now=True)
+            pipes[mode] = pipe
     assert _final_state(pipes["incremental"]) == _final_state(pipes["recompute"])
     assert_golden_state(pipes["incremental"])
 
@@ -184,6 +186,72 @@ def test_incremental_equals_recompute(spark, tmp_path):
     b3 = [r for r in pipes["incremental"].bills().collect()
           if r["id"] == "b-003"][0]
     assert b3["status"] == "unpaid" and b3["amount"] == 250
+
+
+def _commits(pipe: BnplPipeline) -> int:
+    d = os.path.join(pipe.checkpoint, "commits")
+    return len([f for f in os.listdir(d) if f.isdigit()])
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _assert_reads_match_log(pipe: BnplPipeline):
+    from event_streaming_bnpl_demo_spark.streaming import transforms
+
+    log = pipe.read_log()
+    assert _rows(pipe.promises()) == _rows(transforms.project_promises(log))
+    assert _rows(pipe.bills()) == _rows(transforms.project_bills(log))
+
+
+def test_one_pass_is_one_batch_and_reads_serve_projections(spark, tmp_path):
+    """A pass over a backlog of several files commits exactly one
+    micro-batch, and recompute-mode reads (served from the materialized
+    projections) equal the recompute from the archived log — also after
+    a restart on a caught-up checkpoint, where no batch runs."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    write_events(in_dir, GOLDEN[:1], "a.jsonl")
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    pipe.run_stream(available_now=True)
+    before = _commits(pipe)
+
+    write_events(in_dir, GOLDEN[1:2], "b.jsonl")
+    write_events(in_dir, GOLDEN[2:], "c.jsonl")
+    write_events(in_dir, EXTRA_USER, "d.jsonl")
+    pipe.run_stream(available_now=True)
+    assert _commits(pipe) == before + 1
+    assert_golden_state(pipe)
+    _assert_reads_match_log(pipe)
+
+    restarted = BnplPipeline(spark, in_dir, out_dir)
+    restarted.run_stream(available_now=True)
+    assert _commits(restarted) == before + 1
+    assert_golden_state(restarted)
+    _assert_reads_match_log(restarted)
+
+
+@pytest.mark.parametrize("first,second,artifact", [
+    ("recompute", "incremental", "member_bills/"),
+    ("incremental", "recompute", "_member_bills_state/"),
+])
+def test_out_dir_cannot_switch_projection_mode(spark, tmp_path, first,
+                                               second, artifact):
+    """An out_dir keeps its projection mode for life: opening it in the
+    other mode raises instead of silently dropping the state the first
+    mode built (e.g. incremental bills starting empty over a recompute
+    out_dir)."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    write_events(in_dir, GOLDEN, "a.jsonl")
+    BnplPipeline(spark, in_dir, out_dir,
+                 projection_mode=first).run_stream(available_now=True)
+    with pytest.raises(ValueError, match=(
+            f"holds {artifact}.*cannot switch to "
+            f"projection_mode='{second}'")):
+        BnplPipeline(spark, in_dir, out_dir, projection_mode=second)
+    # the same mode reopens fine
+    assert_golden_state(BnplPipeline(spark, in_dir, out_dir,
+                                     projection_mode=first))
 
 
 def _has_protobuf() -> bool:
@@ -220,7 +288,7 @@ def test_state_machine_stream(spark, tmp_path, reorder, api):
     in_dir = str(tmp_path / "in")
     out = str(tmp_path / "state_out")
     write_events(in_dir, events)
-    stream = read_event_stream(spark, in_dir)
+    stream = read_event_stream(spark, in_dir, max_files_per_trigger=1)
     # transformWithState requires the RocksDB provider — scoped to this
     # query start so the session default is untouched afterwards
     provider = (rocksdb_state_store(spark) if api == "transform_with_state"
@@ -250,12 +318,12 @@ def test_compact_log_preserves_rows(spark, tmp_path):
     few, preserves the exact event multiset, and streaming appends keep
     working afterwards (the source checkpoint is untouched)."""
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    for f in range(3):   # 3 files -> 3 micro-batches of small writes
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    for f in range(3):   # one pass per file -> 3 micro-batches of small writes
         write_events(in_dir, [
             _purchase(f"u{f}-{i}", 100 + i, ts=f"2026-01-01T00:0{f}:{i:02d}Z")
             for i in range(5)], name=f"f{f}.jsonl")
-    pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.run_stream(available_now=True)
+        pipe.run_stream(available_now=True)
     before = sorted(r["event_data"]
                     for r in pipe.read_log().select("event_data").collect())
 
@@ -338,7 +406,7 @@ def test_tws_initial_state_bootstraps_batch_history(spark, tmp_path):
          "user_id": "u09", "amount": 1200, "paid_date": "2026-01-05",
          "ingest_ts": "2026-01-05T00:00:00.000Z"},
     ])
-    stream = read_event_stream(spark, in_dir)
+    stream = read_event_stream(spark, in_dir, max_files_per_trigger=1)
     with rocksdb_state_store(spark):
         q = (bill_state_stream_tws(stream, initial_state=boot)
              .writeStream.format("memory").queryName("tws_boot")

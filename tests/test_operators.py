@@ -306,7 +306,8 @@ def test_change_notifier_fires_per_batch(spark, tmp_path):
     notifier = notify_on_update(spark, updates.append)
     try:
         from event_streaming_bnpl_demo_spark.sources import read_event_stream
-        q = (read_event_stream(spark, in_dir).writeStream
+        q = (read_event_stream(spark, in_dir, max_files_per_trigger=1)
+             .writeStream
              .format("memory").queryName("notify_t")
              .option("checkpointLocation", str(tmp_path / "ck"))
              .trigger(availableNow=True).start())

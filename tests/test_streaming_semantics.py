@@ -1104,7 +1104,7 @@ def test_overdue_timer_fires_on_watermark_not_arrival(spark, tmp_path):
                 "ingest_ts": ts}
 
     def run_once():
-        stream = read_event_stream(spark, in_dir)
+        stream = read_event_stream(spark, in_dir, max_files_per_trigger=1)
 
         def sink(batch, _):
             batch.write.mode("append").parquet(out_dir)
@@ -1374,7 +1374,7 @@ def test_kafka_source_contract_no_broker(spark, tmp_path):
     assert krow == frow
 
 
-def test_asof_maxby_readback_equals_window_readback(spark):
+def test_asof_maxby_readback_equals_window_readback(spark, tmp_path):
     """r13: stream_asof_join's fixpoint read switched from a
     row_number()-over-(version DESC) window to a max_by hash aggregate
     (guide §2.3 — the partial aggregate collapses superseded emissions
@@ -1384,9 +1384,33 @@ def test_asof_maxby_readback_equals_window_readback(spark):
     per micro-batch — which the operator guarantees. This pins the two
     readbacks equal on an adversarial emitted table: superseded
     matches, a match that degrades to null, a null that upgrades to a
-    match, never-emitted-again rows, and a null-match fixpoint."""
+    match, never-emitted-again rows, a null-match fixpoint, and a
+    null-version row beside a real one. max_by skips null versions
+    where the window would rank them, so the equivalence also rests on
+    the operator never emitting a null version: that is pinned on a
+    real two-batch run of the streaming topology."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
+
+    from event_streaming_bnpl_demo_spark.plans.queries_stream import \
+        build_asof_stream
+
+    def readbacks(emitted):
+        w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
+        old = (emitted.withColumn("rn", F.row_number().over(w))
+               .filter((F.col("rn") == 1) & F.col("view_id").isNotNull())
+               .select("purchase_id", "user_id", "view_id",
+                       "seconds_since_view"))
+        latest = (emitted.groupBy("purchase_id")
+                  .agg(F.max_by(F.struct("user_id", "view_id",
+                                         "seconds_since_view"),
+                                F.col("version")).alias("m")))
+        new = (latest.filter(F.col("m.view_id").isNotNull())
+               .select("purchase_id", F.col("m.user_id").alias("user_id"),
+                       F.col("m.view_id").alias("view_id"),
+                       F.col("m.seconds_since_view")
+                       .alias("seconds_since_view")))
+        return old, new
 
     rows = [
         # (user_id, purchase_id, view_id, seconds_since_view, version)
@@ -1397,26 +1421,40 @@ def test_asof_maxby_readback_equals_window_readback(spark):
         (3, 300, 40, 9, 2),       # match -> still the fixpoint
         (4, 400, None, None, 5),  # null fixpoint: must be DROPPED
         (5, 500, 50, 1, 1),       # emitted once, never revised
+        (6, 600, 60, 4, None),    # null version: both readbacks skip it
+        (6, 600, 61, 2, 1),       # fixpoint: view 61
     ]
     emitted = spark.createDataFrame(
         rows, "user_id long, purchase_id long, view_id long, "
               "seconds_since_view long, version long")
 
-    w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
-    old = (emitted.withColumn("rn", F.row_number().over(w))
-           .filter((F.col("rn") == 1) & F.col("view_id").isNotNull())
-           .select("purchase_id", "user_id", "view_id",
-                   "seconds_since_view"))
-    latest = (emitted.groupBy("purchase_id")
-              .agg(F.max_by(F.struct("user_id", "view_id",
-                                     "seconds_since_view"),
-                            F.col("version")).alias("m")))
-    new = (latest.filter(F.col("m.view_id").isNotNull())
-           .select("purchase_id", F.col("m.user_id").alias("user_id"),
-                   F.col("m.view_id").alias("view_id"),
-                   F.col("m.seconds_since_view")
-                   .alias("seconds_since_view")))
+    old, new = readbacks(emitted)
     assert sorted(map(tuple, old.collect())) == \
         sorted(map(tuple, new.collect()))
     got = {r["purchase_id"]: r["view_id"] for r in new.collect()}
-    assert got == {100: 20, 200: 30, 300: 40, 500: 50}
+    assert got == {100: 20, 200: 30, 300: 40, 500: 50, 600: 61}
+
+    # the real operator: two micro-batches, the second upgrading the
+    # first's match, and no emitted row without a version
+    in_dir = str(tmp_path / "in")
+    cols = ["user_id", "event_id", "event_type", "ts_us"]
+    spark.createDataFrame(
+        [(1, 100, "purchase", 1_000_000_000), (1, 10, "view", 100_000_000),
+         (2, 200, "purchase", 500_000_000)], cols,
+    ).coalesce(1).write.parquet(in_dir + "/f1")
+    spark.createDataFrame(
+        [(1, 20, "view", 900_000_000), (2, 30, "view", 400_000_000)], cols,
+    ).coalesce(1).write.parquet(in_dir + "/f2")
+    q = (build_asof_stream(spark, in_dir + "/f*")
+         .writeStream.format("memory").queryName("asof_maxby_pin")
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    real = spark.table("asof_maxby_pin")
+    assert real.filter(F.col("version").isNull()).count() == 0
+    old, new = readbacks(real)
+    assert sorted(map(tuple, old.collect())) == \
+        sorted(map(tuple, new.collect()))
+    assert {r["purchase_id"]: r["view_id"] for r in new.collect()} == \
+        {100: 20, 200: 30}
